@@ -1,6 +1,7 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, count_if, map_contains_key}
 import org.apache.spark.storage.StorageLevel
 
 import graft.jobs._
@@ -105,7 +106,7 @@ final class Crawl(
       val seen = ensureSeenBank()
       val merged = DbUpdateJob.mergeSeenNewPagesOverStore(spark, u, seen,
         table.readAll(spark))
-      val id = table.append(merged.toDF(), round, "update")
+      val id = table.append(merged.toDF(), round, "update", metrics = statsColumns(round))
       // fold this round's new keys into the bank and checkpoint it next to
       // the snapshot, so a restarted crawl loads instead of rebuilding
       catchUpSeenBank(seen)
@@ -113,7 +114,7 @@ final class Crawl(
       u.unpersist()
       id
     } else {
-      table.append(updated.toDF(), round, "update")
+      table.append(updated.toDF(), round, "update", metrics = statsColumns(round))
     }
   }
 
@@ -189,11 +190,13 @@ final class Crawl(
     b
   }
 
-  /** Fold the keys of every inject/generate/update delta committed after
-    * the bank's state id (fetch deltas re-write generate's keys; compact
-    * rewrites existing keys — both carry nothing new). One O(delta) add. */
+  /** Fold the keys of every inject/update delta committed after the
+    * bank's state id — the only stages that create keys. Generate and
+    * fetch deltas re-write keys the view already holds, compact rewrites
+    * existing keys: folding them would be a job per round that adds
+    * nothing. One O(delta) add. */
   private def catchUpSeenBank(bank: BloomSeen): Unit = {
-    val stages = Set("inject", "generate", "update")
+    val stages = Set("inject", "update")
     val missing = table.snapshots.filter(s => s.id > seenStateId && stages(s.stage))
     if (missing.nonEmpty) {
       val keys = missing.map(s => table.readSnapshot(spark, s.id))
@@ -259,39 +262,44 @@ final class Crawl(
     }
   }
 
-  /** Per-round stats off the committed DELTA snapshots — they ARE the
-    * round's cohorts: the update delta holds exactly the post-merge batch
-    * rows plus the round's new pages, so no latest-key-wins window over the
-    * whole table history is needed (the round-2 `statsOf` resolved the full
-    * view per round: a per-round full-table scan at 10^10 rows). Falls back
-    * to the resolved view only when a delta snapshot is missing (stats over
-    * a foreign/compacted table). */
-  def statsOf(round: Int): RoundStats = {
-    import graft.model.CrawlStatus
+  /** The [[RoundStats]] counts of a round as columnar aggregates over its
+    * update delta — the delta holds exactly the post-merge batch rows plus
+    * the round's new pages. They are observed during the update write and
+    * committed in its manifest; [[statsOf]] runs the same columns as one
+    * `agg` only for a manifest without them. */
+  private def statsColumns(round: Int): Seq[Column] = {
+    import graft.model.CrawlStatus._
     val batchId = batchIdOf(round)
-    val rows = table.snapshotFor(round, "update") match {
-      case Some(uid) => table.readSnapshot(spark, uid).drop("snapshot_id").as[WebPage]
-      case None => view
+    val inBatch = col("markers")(Marks.GENERATE) === batchId
+    def status(ss: Int*) = inBatch && col("status").isin(ss: _*)
+    Seq(
+      count_if(inBatch).as("generated"),
+      count_if(status(FETCHED, NOTMODIFIED)).as("fetched"),
+      count_if(status(GONE)).as("gone"),
+      count_if(status(REDIR_TEMP, REDIR_PERM)).as("redirected"),
+      count_if(status(RETRY, UNFETCHED)).as("retried"),
+      count_if(col("markers")(Marks.UPDATEDB) === batchId).as("updated"),
+      count_if(col("round") === round && !map_contains_key(col("markers"), Marks.GENERATE) &&
+        !map_contains_key(col("markers"), Marks.INJECT)).as("newPages"))
+  }
+
+  private val statsNames =
+    Seq("generated", "fetched", "gone", "redirected", "retried", "updated", "newPages")
+
+  /** Per-round stats: the metrics the update snapshot's manifest carries,
+    * observed while the delta was written — no job at all. A manifest
+    * without them (written before they existed) costs one aggregate over
+    * the update delta; a missing update snapshot (stats over a
+    * foreign/compacted table) one over the resolved view. */
+  def statsOf(round: Int): RoundStats = {
+    val update = table.snapshotOf(round, "update")
+    val counts = update.map(_.metrics).filter(m => statsNames.forall(m.contains)).getOrElse {
+      val rows = update.fold(view.toDF())(u => table.readSnapshot(spark, u.id))
+      val cols = statsColumns(round)
+      val row = rows.agg(cols.head, cols.tail: _*).head()
+      statsNames.map(n => n -> row.getAs[Long](n)).toMap
     }
-    val upd = rows.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val batch = upd.filter(_.markers.get(Marks.GENERATE).contains(batchId))
-      val byStatus = batch.groupByKey(_.status).count().collect().toMap
-      val generated = byStatus.values.sum
-      val updatedRows = upd.filter(p => p.markers.get(Marks.UPDATEDB).contains(batchId))
-      val newPages = upd.filter(p => p.round == round &&
-        !p.markers.contains(Marks.GENERATE) && !p.markers.contains(Marks.INJECT))
-      RoundStats(round,
-        generated = generated,
-        fetched = byStatus.getOrElse(CrawlStatus.FETCHED, 0L) +
-          byStatus.getOrElse(CrawlStatus.NOTMODIFIED, 0L),
-        gone = byStatus.getOrElse(CrawlStatus.GONE, 0L),
-        redirected = byStatus.getOrElse(CrawlStatus.REDIR_TEMP, 0L) +
-          byStatus.getOrElse(CrawlStatus.REDIR_PERM, 0L),
-        retried = byStatus.getOrElse(CrawlStatus.RETRY, 0L) +
-          byStatus.getOrElse(CrawlStatus.UNFETCHED, 0L),
-        updated = updatedRows.count(),
-        newPages = newPages.count())
-    } finally upd.unpersist()
+    RoundStats(round, counts("generated"), counts("fetched"), counts("gone"),
+      counts("redirected"), counts("retried"), counts("updated"), counts("newPages"))
   }
 }

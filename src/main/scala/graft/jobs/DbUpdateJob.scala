@@ -253,10 +253,12 @@ object DbUpdateJob {
   }
 
   /** The three delta-sized streams of the discovered-URL merge:
-    * batch rows, bloom-negative new pages, bloom-positive candidates. */
+    * batch rows, bloom-negative new pages, bloom-positive candidates — plus
+    * the positive keys, collected when there are at most
+    * `broadcastMaxKeys` of them (None above the threshold). */
   private def splitCandidates(spark: SparkSession, updated: Dataset[WebPage],
-      seen: BloomSeen, metrics: Option[SeenMergeMetrics])
-      : (Dataset[WebPage], Dataset[WebPage], Dataset[(String, WebPage)], Long) = {
+      seen: BloomSeen, metrics: Option[SeenMergeMetrics], broadcastMaxKeys: Long)
+      : (Dataset[WebPage], Dataset[WebPage], Dataset[(String, WebPage)], Option[Seq[String]]) = {
     import spark.implicits._
     val b = spark.sparkContext.broadcast(seen)
     // rows produced by the new-page branch carry no pipeline marks
@@ -285,20 +287,38 @@ object DbUpdateJob {
     val maybeSeen = candidates
       .filter(p => b.value.mightContain(p.key))
       .map(p => (p.key, p))
-    // the count and re-derivations of maybeSeen are passes over `updated`,
-    // which callers persist (Crawl.update) — cache reads, not recomputes
-    (fromBatch, definitelyNew, maybeSeen, maybeSeen.count())
+    // one bounded collect gates the broadcast AND supplies its keys, so
+    // the broadcast side is a local relation, not a second pass; passes
+    // over maybeSeen read `updated`, which callers persist (Crawl.update)
+    val posKeys = boundedCollect(maybeSeen.map(_._1).toDF("key"), broadcastMaxKeys)
+    (fromBatch, definitelyNew, maybeSeen, posKeys.map(_.map(_.getString(0)).toSeq))
+  }
+
+  /** The rows of `rows` when there are at most `max` of them — the
+    * broadcast side of the seen-path semi joins, gated and gathered by one
+    * `limit(max + 1)` collect, so the driver never holds more than max + 1
+    * rows; None when there are more. */
+  private[jobs] def boundedCollect(rows: org.apache.spark.sql.DataFrame,
+      max: Long): Option[Array[org.apache.spark.sql.Row]] = {
+    val local = rows.limit(math.min(max + 1, Int.MaxValue.toLong).toInt).collect()
+    if (local.length > max) None else Some(local)
   }
 
   /** State-preserving merge of bloom-positive candidates into their
-    * existing rows (see mergeSeenNewPages doc for the semantics upgrade). */
+    * existing rows (see mergeSeenNewPages doc for the semantics upgrade).
+    * `existingKeyed` reads the store rows of the positive keys, given them
+    * as a local frame (None: too many to broadcast). Without a positive
+    * key there is nothing to merge and the store is not read. */
   private def mergePositives(fromBatch: Dataset[WebPage],
       definitelyNew: Dataset[WebPage], maybeSeen: Dataset[(String, WebPage)],
-      existingKeyed: Dataset[(String, WebPage)]): Dataset[WebPage] = {
+      posKeys: Option[Seq[String]],
+      existingKeyed: Option[org.apache.spark.sql.DataFrame] => Dataset[(String, WebPage)])
+      : Dataset[WebPage] = if (posKeys.exists(_.isEmpty)) fromBatch.union(definitelyNew) else {
     val session = fromBatch.sparkSession
     import session.implicits._
+    val existing = existingKeyed(posKeys.map(_.toDF("key")))
     val merged = maybeSeen
-      .joinWith(existingKeyed, maybeSeen("_1") === existingKeyed("_1"), "left_outer")
+      .joinWith(existing, maybeSeen("_1") === existing("_1"), "left_outer")
       .map { case ((_, cand), old0) =>
         if (old0 == null) cand
         else {
@@ -326,8 +346,8 @@ object DbUpdateJob {
       broadcastMaxKeys: Long = 5000000L): Dataset[WebPage] = {
     import org.apache.spark.sql.functions.broadcast
     import spark.implicits._
-    val (fromBatch, definitelyNew, maybeSeen, nPositives) =
-      splitCandidates(spark, updated, seen, metrics)
+    val (fromBatch, definitelyNew, maybeSeen, posKeys) =
+      splitCandidates(spark, updated, seen, metrics, broadcastMaxKeys)
     // The store side must NEVER shuffle: a plain equi-join here plans a
     // sort-merge join that exchanges and sorts the WHOLE store every round
     // (the 10^10-row side), for a delta-sized probe set. Instead the
@@ -342,15 +362,13 @@ object DbUpdateJob {
     // whole store to shuffle (AQE's SMJ->BHJ conversion still pays the
     // shuffle WRITE) and sorts it, while the semi path is one narrow scan.
     // The choice optimizes the 1000-executor case, not the sandbox.
-    val existingKeyed: Dataset[(String, WebPage)] =
-      if (nPositives <= broadcastMaxKeys) {
-        val posKeys = maybeSeen.map(_._1).toDF("key")
-        existingRows.join(broadcast(posKeys), Seq("key"), "left_semi")
+    mergePositives(fromBatch, definitelyNew, maybeSeen, posKeys, {
+      case Some(keys) =>
+        existingRows.join(broadcast(keys), Seq("key"), "left_semi")
           .as[WebPage].map(p => (p.key, p))
-      } else {
+      case None =>
         existingRows.map(p => (p.key, p))
-      }
-    mergePositives(fromBatch, definitelyNew, maybeSeen, existingKeyed)
+    })
   }
 
   /** mergeSeenNewPages over the RAW multi-version snapshot frame (columns =
@@ -369,20 +387,16 @@ object DbUpdateJob {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{broadcast, col, row_number}
     import spark.implicits._
-    val (fromBatch, definitelyNew, maybeSeen, nPositives) =
-      splitCandidates(spark, updated, seen, metrics)
+    val (fromBatch, definitelyNew, maybeSeen, posKeys) =
+      splitCandidates(spark, updated, seen, metrics, broadcastMaxKeys)
     val latest = Window.partitionBy(col("key")).orderBy(col("snapshot_id").desc)
     def resolve(df: org.apache.spark.sql.DataFrame): Dataset[(String, WebPage)] =
       df.withColumn("__rn", row_number().over(latest))
         .where(col("__rn") === 1).drop("__rn", "snapshot_id")
         .as[WebPage].map(p => (p.key, p))
-    val existingKeyed: Dataset[(String, WebPage)] =
-      if (nPositives <= broadcastMaxKeys) {
-        val posKeys = maybeSeen.map(_._1).toDF("key")
-        resolve(store.join(broadcast(posKeys), Seq("key"), "left_semi"))
-      } else {
-        resolve(store)
-      }
-    mergePositives(fromBatch, definitelyNew, maybeSeen, existingKeyed)
+    mergePositives(fromBatch, definitelyNew, maybeSeen, posKeys, {
+      case Some(keys) => resolve(store.join(broadcast(keys), Seq("key"), "left_semi"))
+      case None => resolve(store)
+    })
   }
 }

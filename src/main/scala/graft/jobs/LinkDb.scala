@@ -225,24 +225,27 @@ object LinkDb {
         // the maybe-set (bloom fpp x candidates + true hits) broadcasts
         // into a left-semi scan of the store so the store never shuffles
         // (the mergeSeenNewPagesOverStore shape), then confirms with a
-        // delta x delta anti-join. GATED on the maybe-set's actual count
-        // (one extra pass over the candidate aggregate — the same guard
-        // DbUpdateJob.mergeSeenNewPages applies): in a dense web graph,
-        // true hits (links to already-known pages) can DOMINATE a round's
-        // candidates, so "delta-sized" is not a given — above the
+        // delta x delta anti-join. GATED on the maybe-set's size by one
+        // bounded collect that also becomes the broadcast side (the same
+        // gate DbUpdateJob.mergeSeenNewPages applies): in a dense web
+        // graph, true hits (links to already-known pages) can DOMINATE a
+        // round's candidates, so "delta-sized" is not a given — above the
         // threshold both broadcasts would exceed broadcast capacity /
         // OOM the driver, where the plain shuffled anti-join below
         // degrades gracefully at any size.
-        val positives = candidates.filter(probe)
-        if (positives.count() <= broadcastMaxKeys) {
-          val prunedStoreKeys = existingKeys.join(
-            broadcast(positives.select(col("key"))), Seq("key"), "left_semi")
-          // the confirm is delta x (≤ delta): broadcast it too, so neither
-          // join of the seen path ever plans a store-keyed exchange
-          candidates.filter(!probe).unionByName(
-            positives.join(broadcast(prunedStoreKeys), Seq("key"), "left_anti"))
-        } else {
-          candidates.join(existingKeys, Seq("key"), "left_anti")
+        DbUpdateJob.boundedCollect(candidates.filter(probe), broadcastMaxKeys) match {
+          case Some(rows) if rows.isEmpty => candidates.filter(!probe)
+          case Some(rows) =>
+            val positives = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+              candidates.schema)
+            val prunedStoreKeys = existingKeys.join(
+              broadcast(positives.select(col("key"))), Seq("key"), "left_semi")
+            // the confirm is delta x (≤ delta): broadcast it too, so neither
+            // join of the seen path ever plans a store-keyed exchange
+            candidates.filter(!probe).unionByName(
+              positives.join(broadcast(prunedStoreKeys), Seq("key"), "left_anti"))
+          case None =>
+            candidates.join(existingKeys, Seq("key"), "left_anti")
         }
       case None =>
         candidates.join(existingKeys, Seq("key"), "left_anti")

@@ -1135,6 +1135,16 @@ object TextAnalysis {
           .cast("double") / 1000.0 - 0.5)
   }
 
+  /** A double rounded to `k` decimals on its binary value, half away from
+    * zero: round(x * 10^k) / 10^k, as C's `round` and DuckDB compute it.
+    * Spark's `round(x, k)` rounds the decimal string HALF_UP instead, which
+    * differs on ties like an average of exactly 313.585 (binary
+    * 313.58499…): 313.59 there, 313.58 here. */
+  def roundBinary(x: Column, k: Int): Column = {
+    val m = math.pow(10, k)
+    round(x * m) / m
+  }
+
   /** Per-language quality aggregates (cnt, avg tokens/chars, stop ratio). */
   def qualityByLang(docs: DataFrame, textCol: String, langCol: String,
       charsCol: String, stopwords: Seq[String] = Seq("the", "a")): DataFrame =
@@ -1145,9 +1155,9 @@ object TextAnalysis {
         w => stopwords.map(s => w === s).reduce(_ || _))))
       .groupBy(col(langCol))
       .agg(count(lit(1)).as("cnt"),
-        round(avg(col("n_tokens")), 4).as("avg_tokens"),
-        round(avg(col(charsCol)), 2).as("avg_chars"),
-        round(avg(col("n_stop").cast("double") / col("n_tokens")), 4).as("stop_ratio"))
+        roundBinary(avg(col("n_tokens")), 4).as("avg_tokens"),
+        roundBinary(avg(col(charsCol)), 2).as("avg_chars"),
+        roundBinary(avg(col("n_stop").cast("double") / col("n_tokens")), 4).as("stop_ratio"))
   // no orderBy tail: per-language output is tiny, but the op stays
   // sort-free like the rest of the family — presentation layers sort
 }

@@ -1,12 +1,16 @@
 package graft.table
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Iceberg-style snapshot table over plain Parquet.
   *
@@ -23,7 +27,8 @@ import org.apache.spark.sql.functions._
   * Layout:
   * {{{
   *   <path>/data/sid=<id>/part-*.parquet   one directory per snapshot
-  *   <path>/snapshots/<id>.json            manifest: id, parent, round, stage, base
+  *   <path>/snapshots/<id>.json            manifest: id, parent, round, stage, base,
+  *                                         schema, metrics
   *   <path>/HEAD                           current snapshot id (atomic rename)
   * }}}
   *
@@ -31,11 +36,20 @@ import org.apache.spark.sql.functions._
   * from the newest base at-or-before the read snapshot onward. Rows carry
   * `snapshot_id`; the current view resolves duplicate keys by latest
   * snapshot_id — exactly the put-wins semantics of the reference store.
+  *
+  * A manifest also carries the data schema (in its Parquet read-back form),
+  * so reads name it instead of running Spark's footer-inference job, and
+  * optionally `metrics`: aggregates observed during the snapshot's own
+  * write. Manifests without them (older tables) read as before.
   */
 final class SnapshotTable(val path: String, val keyCol: String = "key",
     hadoopConf: Configuration = new Configuration()) {
 
-  case class Snapshot(id: Long, parent: Long, round: Int, stage: String, base: Boolean)
+  case class Snapshot(id: Long, parent: Long, round: Int, stage: String, base: Boolean,
+      schema: Option[StructType] = None, metrics: Map[String, Long] = Map.empty)
+
+  NioLocalFileSystem.installDefault(
+    hadoopConf +: SparkSession.getActiveSession.map(_.sparkContext.hadoopConfiguration).toSeq: _*)
 
   private val root = new Path(path)
   private def fs: FileSystem = root.getFileSystem(hadoopConf)
@@ -62,15 +76,33 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
 
   def exists: Boolean = fs.exists(snapshotsDir)
 
-  def snapshots: Seq[Snapshot] =
-    if (!fs.exists(snapshotsDir)) Seq.empty
-    else fs.listStatus(snapshotsDir).toSeq
-      .filter(_.getPath.getName.endsWith(".json"))
-      .map(st => parseManifest(readString(st.getPath)))
-      .sortBy(_.id)
+  /** Parsed manifests by id, with the (length, mtime) they were parsed at.
+    * A committed manifest never changes; only an orphan left by a crashed
+    * append is rewritten, by the retry at the same id, which the stamp
+    * catches. The listing itself is never cached, so snapshots committed
+    * by another writer still appear. */
+  private val parsed = new ConcurrentHashMap[Long, ((Long, Long), Snapshot)]()
+
+  private def manifest(st: FileStatus): Snapshot = {
+    val id = st.getPath.getName.stripSuffix(".json").toLong
+    val stamp = (st.getLen, st.getModificationTime)
+    Option(parsed.get(id)).collect { case (`stamp`, s) => s }.getOrElse {
+      val s = parseManifest(readString(st.getPath))
+      parsed.put(id, (stamp, s))
+      s
+    }
+  }
+
+  def snapshots: Seq[Snapshot] = {
+    val listing =
+      try fs.listStatus(snapshotsDir).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listing.filter(_.getPath.getName.endsWith(".json")).map(manifest).sortBy(_.id)
+  }
 
   def head: Option[Long] =
-    if (fs.exists(headFile)) Some(readString(headFile).trim.toLong) else None
+    try Some(readString(headFile).trim.toLong)
+    catch { case _: java.io.FileNotFoundException => None }
 
   def headSnapshot: Option[Snapshot] = head.flatMap(id => snapshots.find(_.id == id))
 
@@ -78,15 +110,31 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
     * column. Manifest write + HEAD rename make the commit atomic-enough for
     * single-writer crawl rounds (a crash before the HEAD move leaves an
     * orphan data dir that is never referenced).
-    */
-  def append(df: DataFrame, round: Int, stage: String, base: Boolean = false): Long = {
-    val id = head.getOrElse(0L) + 1
+    *
+    * `metrics` are named integral aggregates (e.g. `count_if(...).as(n)`)
+    * observed with `Dataset.observe` during the write itself — no extra
+    * pass — and committed in the manifest (see [[Snapshot.metrics]]). */
+  def append(df: DataFrame, round: Int, stage: String, base: Boolean = false,
+      metrics: Seq[Column] = Nil): Long = {
     val parent = head.getOrElse(0L)
-    df.withColumn("snapshot_id", lit(id))
+    val id = parent + 1
+    val out = df.withColumn("snapshot_id", lit(id))
+    val observation = if (metrics.isEmpty) None else Some(Observation())
+    observation.fold(out)(o => out.observe(o, metrics.head, metrics.tail: _*))
       .write.mode("overwrite").parquet(dataDir(id).toString)
-    fs.mkdirs(snapshotsDir)
-    writeString(new Path(snapshotsDir, s"$id.json"),
-      s"""{"id":$id,"parent":$parent,"round":$round,"stage":"$stage","base":$base}""")
+    // the observation completes when the listener bus reports the write's
+    // query execution, moments after the write returns; a value that does
+    // not arrive in time is left out, and readers recompute it
+    val observed = observation.flatMap(o => scala.util.Try(
+      scala.concurrent.Await.result(o.future, SnapshotTable.ObservationWait)).toOption).map { row =>
+      row.schema.fieldNames.zipWithIndex.collect {
+        case (name, i) if !row.isNullAt(i) => name -> row.getAs[Number](i).longValue
+      }.toMap
+    }.getOrElse(Map.empty[String, Long])
+    writeString(new Path(snapshotsDir, s"$id.json"), renderManifest(
+      Snapshot(id, parent, round, stage, base, Some(SnapshotTable.readBack(out.schema)),
+        observed)))
+    parsed.remove(id)
     val tmp = new Path(root, ".HEAD.tmp")
     writeString(tmp, id.toString)
     fs.delete(headFile, false)
@@ -94,38 +142,64 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
     id
   }
 
-  private def parseManifest(s: String): Snapshot = {
-    def field(name: String): String = {
-      val re = ("\"" + name + "\":\\s*(\"[^\"]*\"|[^,}]*)").r
-      re.findFirstMatchIn(s).map(_.group(1).stripPrefix("\"").stripSuffix("\"")).getOrElse("")
-    }
-    Snapshot(field("id").toLong, field("parent").toLong, field("round").toInt,
-      field("stage"), field("base").toBoolean)
+  private def renderManifest(s: Snapshot): String = {
+    val fields = List[JField](
+      "id" -> JLong(s.id), "parent" -> JLong(s.parent), "round" -> JInt(s.round),
+      "stage" -> JString(s.stage), "base" -> JBool(s.base)) ++
+      s.schema.map(t => "schema" -> JsonMethods.parse(t.json)) ++
+      (if (s.metrics.isEmpty) None
+       else Some("metrics" -> JObject(s.metrics.toList.sorted.map { case (k, v) =>
+         k -> JLong(v) })))
+    JsonMethods.compact(JsonMethods.render(JObject(fields)))
   }
 
-  /** Snapshot ids contributing to a read at `atId`: newest base <= atId,
+  private def parseManifest(s: String): Snapshot = {
+    implicit val formats: Formats = DefaultFormats
+    val j = JsonMethods.parse(s)
+    Snapshot((j \ "id").extract[Long], (j \ "parent").extract[Long], (j \ "round").extract[Int],
+      (j \ "stage").extract[String], (j \ "base").extract[Boolean],
+      (j \ "schema").toOption.map(v =>
+        DataType.fromJson(JsonMethods.compact(JsonMethods.render(v))).asInstanceOf[StructType]),
+      (j \ "metrics").extractOpt[Map[String, Long]].getOrElse(Map.empty))
+  }
+
+  /** Snapshots contributing to a read at `atId`: newest base <= atId,
     * then every snapshot after it up to atId. */
-  private def chainFor(atId: Long): Seq[Long] = {
+  private def chainFor(atId: Long): Seq[Snapshot] = {
     val all = snapshots.filter(_.id <= atId)
     val lastBase = all.filter(_.base).map(_.id).maxOption.getOrElse(0L)
-    all.map(_.id).filter(_ >= lastBase)
+    all.filter(_.id >= lastBase)
+  }
+
+  /** Parquet read of snapshot data dirs, under the schema their manifests
+    * agree on; without one (a manifest that predates it, or a chain of
+    * mixed schemas) Spark infers it from the footers. */
+  private def read(spark: SparkSession, ids: Seq[Long], schemas: Seq[Option[StructType]]) = {
+    val dirs = ids.map(dataDir(_).toString)
+    schemas.distinct match {
+      case Seq(Some(s)) => spark.read.schema(s).parquet(dirs: _*)
+      case _ => spark.read.parquet(dirs: _*)
+    }
   }
 
   /** All row versions visible at a snapshot (multi-version scan — the shape
     * generate/stats read, SURVEY.md §1.4). */
   def readAt(spark: SparkSession, atId: Long): DataFrame = {
-    val dirs = chainFor(atId).map(dataDir(_).toString)
-    if (dirs.isEmpty) throw new IllegalStateException(s"empty table at $path")
-    spark.read.parquet(dirs: _*)
+    val chain = chainFor(atId)
+    if (chain.isEmpty) throw new IllegalStateException(s"empty table at $path")
+    read(spark, chain.map(_.id), chain.map(_.schema))
   }
 
   /** Just the rows written by one snapshot (a stage's delta). */
   def readSnapshot(spark: SparkSession, id: Long): DataFrame =
-    spark.read.parquet(dataDir(id).toString)
+    read(spark, Seq(id), Seq(snapshots.find(_.id == id).flatMap(_.schema)))
+
+  /** The snapshot of a given (round, stage) commit, if present. */
+  def snapshotOf(round: Int, stage: String): Option[Snapshot] =
+    snapshots.find(s => s.round == round && s.stage == stage)
 
   /** The snapshot id of a given (round, stage) commit, if present. */
-  def snapshotFor(round: Int, stage: String): Option[Long] =
-    snapshots.find(s => s.round == round && s.stage == stage).map(_.id)
+  def snapshotFor(round: Int, stage: String): Option[Long] = snapshotOf(round, stage).map(_.id)
 
   def readAll(spark: SparkSession): DataFrame =
     readAt(spark, head.getOrElse(throw new IllegalStateException(s"no HEAD at $path")))
@@ -142,14 +216,11 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
 
   /** Rewrite the resolved view as a single base snapshot, bounding the
     * number of deltas a read must merge — the Iceberg rewrite/compact
-    * analogue; run every k rounds at scale. */
-  def compact(spark: SparkSession, round: Int): Long = {
-    val resolved = currentView(spark).drop("snapshot_id").cache()
-    resolved.count() // materialize before the new snapshot dir is written
-    val id = append(resolved, round, "compact", base = true)
-    resolved.unpersist()
-    id
-  }
+    * analogue; run every k rounds at scale. The view reads the chain up to
+    * HEAD only, so the new `data/sid=<HEAD+1>` directory (and any orphan a
+    * crashed append left there) is never part of what it reads. */
+  def compact(spark: SparkSession, round: Int): Long =
+    append(currentView(spark).drop("snapshot_id"), round, "compact", base = true)
 
   /** Highest completed round+stage, for checkpoint resume. */
   def lastCompleted: Option[(Int, String)] = headSnapshot.map(s => (s.round, s.stage))
@@ -161,7 +232,7 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
     * skip the round's remaining crawl stages on resume. */
   def lastCompletedOf(known: Set[String]): Option[(Int, String)] = {
     val byId = snapshots.map(s => s.id -> s).toMap
-    Iterator.iterate(headSnapshot)(_.flatMap(s => byId.get(s.parent)))
+    Iterator.iterate(head.flatMap(byId.get))(_.flatMap(s => byId.get(s.parent)))
       .takeWhile(_.isDefined).flatten
       .find(s => known.contains(s.stage))
       .map(s => (s.round, s.stage))
@@ -169,4 +240,23 @@ final class SnapshotTable(val path: String, val keyCol: String = "key",
 
   /** Drop the whole table (reference: DbCleanerJob store.deleteSchema, A10). */
   def drop(): Unit = fs.delete(root, true)
+}
+
+object SnapshotTable {
+
+  /** How long [[SnapshotTable.append]] waits for its observed metrics. */
+  private val ObservationWait: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(10, "s")
+
+  /** A schema as Parquet reads it back: Spark writes every field, array
+    * element and map value as nullable. */
+  private def readBack(t: StructType): StructType = nullable(t).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType),
+      nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 }

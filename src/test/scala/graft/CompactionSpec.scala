@@ -44,4 +44,26 @@ class CompactionSpec extends AnyFunSuite {
     assert(lastBase > 0)
     assert(t.snapshots.count(_.id >= lastBase) <= 2)
   }
+
+  test("compaction over a stale orphan data dir left by a crashed append") {
+    val dir = SparkTestBase.tmpDir("compact-orphan")
+    val t = new graft.table.SnapshotTable(dir)
+    t.append(Seq(("k1", "a"), ("k2", "b")).toDF("key", "v"), 1, "inject")
+    t.append(Seq(("k2", "b2"), ("k3", "c")).toDF("key", "v"), 2, "update")
+    def view(): Map[String, String] =
+      t.currentView(spark).select("key", "v").as[(String, String)].collect().toMap
+    val before = view()
+    // a crashed append at id HEAD+1 = 3: its data dir and manifest were
+    // written (a newer k1, an extra key), HEAD was never moved
+    Seq(("k1", "orphan", 3L), ("k9", "orphan", 3L)).toDF("key", "v", "snapshot_id")
+      .write.parquet(s"$dir/data/sid=3")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "snapshots", "3.json"),
+      """{"id":3,"parent":2,"round":9,"stage":"orphan","base":true}""".getBytes("UTF-8"))
+    assert(t.snapshots.exists(_.stage == "orphan"))
+    assert(t.compact(spark, 2) == 3L)
+    assert(view() == before)
+    assert(t.readAll(spark).count() == before.size)
+    assert(t.snapshots.map(s => (s.id, s.stage, s.base)) ==
+      Seq((1L, "inject", false), (2L, "update", false), (3L, "compact", true)))
+  }
 }

@@ -273,43 +273,68 @@ class CrawlE2ESpec extends AnyFunSuite {
       s"round 3 must complete past the foreign snapshot: $stages")
   }
 
+  /** A round's stats by the round-2 formula: the full resolved view,
+    * evaluated right after the round. */
+  private def viewStats(crawl: Crawl, r: Int): RoundStats = {
+    val view = crawl.table.currentView(spark).drop("snapshot_id").as[WebPage].collect().toSeq
+    val batchId = crawl.batchIdOf(r)
+    val batch = view.filter(_.markers.get(Marks.GENERATE).contains(batchId))
+    val byStatus = batch.groupBy(_.status).view.mapValues(_.size.toLong).toMap
+    RoundStats(r,
+      generated = byStatus.values.sum,
+      fetched = byStatus.getOrElse(CrawlStatus.FETCHED, 0L) +
+        byStatus.getOrElse(CrawlStatus.NOTMODIFIED, 0L),
+      gone = byStatus.getOrElse(CrawlStatus.GONE, 0L),
+      redirected = byStatus.getOrElse(CrawlStatus.REDIR_TEMP, 0L) +
+        byStatus.getOrElse(CrawlStatus.REDIR_PERM, 0L),
+      retried = byStatus.getOrElse(CrawlStatus.RETRY, 0L) +
+        byStatus.getOrElse(CrawlStatus.UNFETCHED, 0L),
+      updated = view.count(p => p.markers.get(Marks.UPDATEDB).contains(batchId)).toLong,
+      newPages = view.count(p => p.round == r &&
+        !p.markers.contains(Marks.GENERATE) && !p.markers.contains(Marks.INJECT)).toLong)
+  }
+
   test("statsOf reads the round's update delta and equals the view-derived stats") {
-    import graft.model.CrawlStatus
     val nPages = 150L
     val nHosts = 5
-    val conf = baseConf.copy(topN = 10, numPartitions = 4)
     val source = PhashOutlinks(nPages, nHosts, degree = 3)
     val seeds = Seq(ImageSynth.urlOf(0, nHosts), ImageSynth.urlOf(1, nHosts))
-    val dir = SparkTestBase.tmpDir("stats-delta")
     val images = ImageSynth.imagesDf(spark, nPages, nHosts, partitions = 4)
-    val crawl = new Crawl(spark, dir, images, conf, source)
-    crawl.inject(seeds)
-
-    // per round: recompute the stats with the round-2 formula (full
-    // resolved view, evaluated at round end like the old statsOf) and
-    // require equality with the delta-based RoundStats
-    (1 to 3).foreach { r =>
-      crawl.generate(r); crawl.fetchAndParse(r); crawl.update(r)
-      val stats = crawl.statsOf(r)
-      val view = crawl.table.currentView(spark).drop("snapshot_id").as[WebPage].collect().toSeq
-      val batchId = crawl.batchIdOf(r)
-      val batch = view.filter(_.markers.get(Marks.GENERATE).contains(batchId))
-      val byStatus = batch.groupBy(_.status).view.mapValues(_.size.toLong).toMap
-      val want = RoundStats(r,
-        generated = byStatus.values.sum,
-        fetched = byStatus.getOrElse(CrawlStatus.FETCHED, 0L) +
-          byStatus.getOrElse(CrawlStatus.NOTMODIFIED, 0L),
-        gone = byStatus.getOrElse(CrawlStatus.GONE, 0L),
-        redirected = byStatus.getOrElse(CrawlStatus.REDIR_TEMP, 0L) +
-          byStatus.getOrElse(CrawlStatus.REDIR_PERM, 0L),
-        retried = byStatus.getOrElse(CrawlStatus.RETRY, 0L) +
-          byStatus.getOrElse(CrawlStatus.UNFETCHED, 0L),
-        updated = view.count(p => p.markers.get(Marks.UPDATEDB).contains(batchId)).toLong,
-        newPages = view.count(p => p.round == r &&
-          !p.markers.contains(Marks.GENERATE) && !p.markers.contains(Marks.INJECT)).toLong)
-      assert(stats == want, s"round $r delta stats diverge from view stats")
-      // sanity: the rounds did real work
-      assert(stats.generated > 0 && stats.fetched > 0)
+    Seq(false, true).foreach { seenPath =>
+      val conf = baseConf.copy(topN = 10, numPartitions = 4, filterSeenNewPages = seenPath)
+      val dir = SparkTestBase.tmpDir("stats-delta")
+      val crawl = new Crawl(spark, dir, images, conf, source)
+      crawl.inject(seeds)
+      // per round: the observed stats the update manifest carries equal
+      // the view-derived ones
+      val stats = (1 to 3).map { r =>
+        crawl.generate(r); crawl.fetchAndParse(r); crawl.update(r)
+        val st = crawl.statsOf(r)
+        assert(crawl.table.snapshotOf(r, "update").exists(_.metrics.size == 7),
+          s"round $r update manifest lacks its observed metrics (seen path $seenPath)")
+        assert(st == viewStats(crawl, r),
+          s"round $r delta stats diverge from view stats (seen path $seenPath)")
+        // sanity: the rounds did real work
+        assert(st.generated > 0 && st.fetched > 0)
+        st
+      }
+      // a fresh instance resumes round 4 and reads rounds 1-3 off the manifests
+      val resumed = new Crawl(spark, dir, images, conf, source)
+      val all = resumed.run(4, seeds)
+      assert(all.take(3) == stats, s"seen path $seenPath")
+      assert(all(3) == viewStats(resumed, 4), s"seen path $seenPath")
+      // a manifest without metrics (written before they existed) recounts
+      // the same stats from its delta
+      val uid = resumed.table.snapshotFor(1, "update").get
+      val m = new java.io.File(dir, s"snapshots/$uid.json")
+      new java.io.File(dir, s"snapshots/.$uid.json.crc").delete()
+      val src = scala.io.Source.fromFile(m)
+      val json = try src.mkString finally src.close()
+      val stripped = json.replaceAll(",\"metrics\":\\{[^}]*\\}", "")
+      assert(stripped != json)
+      java.nio.file.Files.write(m.toPath, stripped.getBytes("UTF-8"))
+      assert(resumed.table.snapshotOf(1, "update").exists(_.metrics.isEmpty))
+      assert(resumed.statsOf(1) == stats.head, s"seen path $seenPath")
     }
   }
 

@@ -295,15 +295,23 @@ class JobsSpec extends AnyFunSuite {
     val pages = crawled.table.currentView(spark).drop("snapshot_id").as[WebPage]
     val bank = graft.seen.BloomSeen.build(
       pages.map(_.key).rdd, numParts = 2, expectedItems = 1000, fpp = 0.01)
-    val seedEdges = Seq(WebPage(url = "http://frontier.test/src1.html",
-      outlinks = Map("http://frontier.test/new.html" -> "a"))).toDS()
     val conf = CrawlConfig(fetchIntervalDefault = 0, numPartitions = 4)
-    val plan = LinkDb.frontier(spark, LinkDb.edges(spark, seedEdges),
-      pages, conf, 1234L, seen = Some(bank))
-      .queryExecution.executedPlan.toString
-    // both store probes are broadcast joins (pruned-probe semi + delta
-    // confirm): a SortMergeJoin or a distinct aggregate on the store key
-    // column would mean the 10^10-row side rides an Exchange again
+    def planOf(targets: String*): String = {
+      val seedEdges = Seq(WebPage(url = "http://frontier.test/src1.html",
+        outlinks = targets.map(_ -> "a").toMap)).toDS()
+      LinkDb.frontier(spark, LinkDb.edges(spark, seedEdges),
+        pages, conf, 1234L, seen = Some(bank))
+        .queryExecution.executedPlan.toString
+    }
+    // no bloom positive among the targets: the store is not joined at all
+    val unseen = planOf("http://frontier.test/new.html")
+    assert(!unseen.contains("SortMergeJoin"),
+      s"frontier seen path must not shuffle the store:\n$unseen")
+    // a link to a stored page is a bloom positive: both store probes are
+    // broadcast joins (pruned-probe semi + delta confirm): a SortMergeJoin
+    // or a distinct aggregate on the store key column would mean the
+    // 10^10-row side rides an Exchange again
+    val plan = planOf("http://frontier.test/new.html", pages.head().url)
     assert(!plan.contains("SortMergeJoin"),
       s"frontier seen path must not shuffle the store:\n$plan")
     assert(plan.contains("LeftSemi"), s"pruned-probe semi join missing:\n$plan")

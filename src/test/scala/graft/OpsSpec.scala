@@ -606,4 +606,25 @@ class OpsSpec extends AnyFunSuite {
       assert(wrows.nonEmpty, "watermark should have closed round-1 windows")
     } finally wq.stop()
   }
+
+  test("qualityByLang rounds its averages on the binary double, like the DuckDB oracle") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    // 117 x 314 + 83 x 313 = 62717 chars over 200 docs: avg_chars is the
+    // double nearest 313.585 (313.58499…), a tie only in decimal. DuckDB's
+    // round(x, 2) = round(x * 100) / 100 gives 313.58; Spark's round(x, 2)
+    // (HALF_UP on the decimal string) would give 313.59.
+    val docs = (Seq.fill(117)(314) ++ Seq.fill(83)(313)).map(n => ("en", "the cat", n))
+      .toDF("lang", "text", "n_chars")
+    val row = graft.ops.TextAnalysis.qualityByLang(docs, "text", "lang", "n_chars").head()
+    assert(row.getAs[Long]("cnt") == 200L)
+    assert(row.getAs[Double]("avg_chars") == 313.58)
+    assert(row.getAs[Double]("avg_tokens") == 2.0)
+    assert(row.getAs[Double]("stop_ratio") == 0.5)
+    val r = spark.range(1).select(
+      graft.ops.TextAnalysis.roundBinary(lit(313.585), 2),
+      graft.ops.TextAnalysis.roundBinary(lit(2.675), 2),
+      graft.ops.TextAnalysis.roundBinary(lit(-0.125), 2)).head()
+    assert((r.getDouble(0), r.getDouble(1), r.getDouble(2)) == ((313.58, 2.68, -0.13)))
+  }
 }

@@ -43,4 +43,33 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t2.head.contains(3L))
     assert(t2.currentView(spark).count() == 3)
   }
+
+  test("manifests carry the read-back schema; old and mixed manifests infer it") {
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir("snaptable-schema")
+    val t = new SnapshotTable(dir)
+    val pages = Seq(graft.model.WebPage(url = "http://a.test/", key = "k1",
+      markers = Map("m" -> "1"), outlinks = Map("http://b.test/" -> "b")))
+    t.append(pages.toDS().toDF(), 1, "inject")
+    t.append(pages.map(_.copy(key = "k2")).toDS().toDF(), 1, "update")
+    // the manifest schema is what Spark's footer inference reads back
+    val inferred = spark.read.parquet(s"$dir/data/sid=1").schema
+    assert(t.snapshots.map(_.schema) == Seq(Some(inferred), Some(inferred)))
+    assert(t.readSnapshot(spark, 1).schema == inferred)
+    assert(t.readAll(spark).select("key").as[String].collect().sorted.toSeq == Seq("k1", "k2"))
+
+    // a manifest written before schemas were recorded reads by inference
+    val m = java.nio.file.Paths.get(dir, "snapshots", "2.json")
+    new java.io.File(dir, "snapshots/.2.json.crc").delete()
+    java.nio.file.Files.write(m,
+      """{"id":2,"parent":1,"round":1,"stage":"update","base":false}""".getBytes("UTF-8"))
+    assert(t.snapshots.find(_.id == 2).exists(_.schema.isEmpty))
+    assert(t.readSnapshot(spark, 2).schema == inferred)
+    assert(t.readAll(spark).count() == 2)
+
+    // a chain of mixed schemas keeps the inference path
+    t.append(Seq(("k3", 7)).toDF("key", "extra"), 2, "foreign")
+    assert(t.snapshots.flatMap(_.schema).distinct.size == 2)
+    assert(t.readAll(spark).count() == 3)
+  }
 }
